@@ -43,7 +43,15 @@ _WIDENT = 0xA5EC
 
 
 def extract_doc_text(payload: bytes) -> tuple[int, str]:
-    """CFB payload -> (n_chars, text) of the main document."""
+    """CFB payload -> (n_chars, text) of the main document. ValueError
+    on corrupt input, a truncated Clx included."""
+    try:
+        return _doc_text(payload)
+    except (struct.error, IndexError) as e:
+        raise ValueError(f"corrupt DOC: {e}") from e
+
+
+def _doc_text(payload: bytes) -> tuple[int, str]:
     word = read_cfb_stream(payload, "WordDocument")
     if len(word) < 0x200:
         raise ValueError("WordDocument stream too short for a FIB")

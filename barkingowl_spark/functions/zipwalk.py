@@ -175,8 +175,15 @@ def _walk_checked(
 def read_zip_member(payload: bytes, name: str) -> bytes:
     """Decompressed bytes of the named member (first match in
     central-directory order), CRC-verified — ValueError if absent
-    or failing its checksum. The random-access primitive the
-    office-document extractors build on."""
+    or failing its checksum (or corrupt). The random-access
+    primitive the office-document extractors build on."""
+    try:
+        return _read_member(payload, name)
+    except (struct.error, IndexError, zlib.error) as e:
+        raise ValueError(f"corrupt ZIP: {e}") from e
+
+
+def _read_member(payload: bytes, name: str) -> bytes:
     tail_start = max(0, len(payload) - 65536 - 22)
     eocd = payload.rfind(ZIP_EOCD, tail_start)
     if eocd < 0:

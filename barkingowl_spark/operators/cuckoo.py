@@ -249,7 +249,9 @@ def cuckoo_maybe_seen_udf(spark, snap: dict[int, tuple[bytes, int, bool]],
                           n_partitions: int):
     """Vectorized probe: url_hash -> bool (True = possibly seen). An
     overflowed partition answers True for everything (degrades to the
-    exact anti-join — correct, just unaccelerated)."""
+    exact anti-join — correct, just unaccelerated). The snapshot's
+    broadcast is exposed as ``probe.broadcast`` for the caller to
+    unpersist."""
     bc = spark.sparkContext.broadcast(snap)
 
     @F.pandas_udf(BooleanType())
@@ -273,4 +275,5 @@ def cuckoo_maybe_seen_udf(spark, snap: dict[int, tuple[bytes, int, bool]],
             out[mask] = _probe_many(table, vals[mask], nb)
         return pd.Series(out)
 
+    probe.broadcast = bc
     return probe

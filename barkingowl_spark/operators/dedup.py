@@ -12,11 +12,14 @@ The reference's seen-set is an O(n) Python list scan per link
   table — guarantees the exact-seen-set metric (BASELINE.json).
 
 Two transports, one policy: IncrementalBloom keeps the per-pid
-bitsets in a driver dict and broadcasts them (the sandbox default);
-TableBloom (r4) keeps them as a versioned (pid, bitset) parquet table
-OR-merged per wave and probed by a pid-cogrouped applyInPandas — the
-10^10 transport, where the driver never holds a bitset
-(CrawlConfig.prefilter_transport="table"; PLANS.md section).
+bitsets in a driver dict, builds each wave's delta on the driver from
+an Arrow collect of the wave's url_hash column (no Python worker, no
+shuffle) and broadcasts them (the sandbox default, bounded by the auto
+switchover in plans/crawl.py); TableBloom (r4) keeps them as a
+versioned (pid, bitset) parquet table OR-merged per wave and probed by
+a pid-cogrouped applyInPandas — the 10^10 transport, where the driver
+never holds a bitset or a key (CrawlConfig.prefilter_transport="table";
+PLANS.md section).
 """
 
 from __future__ import annotations
@@ -55,29 +58,6 @@ def _probe_bitset(vals: np.ndarray, bits: np.ndarray, m: int) -> np.ndarray:
     return maybe
 
 
-def build_bloom(seen: DataFrame, n_partitions: int = 32) -> dict[int, tuple[bytes, int]]:
-    """{partition_id: (bitset_bytes, m)} built distributedly per partition."""
-    keyed = seen.select(
-        F.pmod(F.col("url_hash"), F.lit(n_partitions)).cast("int").alias("pid"),
-        "url_hash",
-    )
-
-    def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf["url_hash"].to_numpy(dtype=np.int64)
-        m = max(64, int(len(vals) * BITS_PER_KEY))
-        bits = _build_bitset(vals, m)
-        return pd.DataFrame(
-            {"pid": [int(key[0])], "bits": [bits.tobytes()], "m": [m]}
-        )
-
-    rows = (
-        keyed.groupBy("pid")
-        .applyInPandas(make, schema="pid int, bits binary, m long")
-        .collect()
-    )
-    return {r["pid"]: (r["bits"], r["m"]) for r in rows}
-
-
 _POPCOUNT_LUT = np.unpackbits(
     np.arange(256, dtype=np.uint8)[:, None], axis=1
 ).sum(axis=1).astype(np.int64)
@@ -86,19 +66,21 @@ _POPCOUNT_LUT = np.unpackbits(
 class IncrementalBloom:
     """Persistent cross-wave Bloom state (O12/O22) with ADAPTIVE sizing.
 
-    Per-partition bitsets so new keys OR in incrementally — one
-    distributed build over each wave's FRESH keys instead of a full
-    seen-set rebuild per wave. Saturation only raises the FP rate (more
-    anti-join probes), never correctness — but a saturated prefilter
-    silently degenerates to the bare anti-join at exactly the scale it
-    was built for, so the filter GROWS: when the max per-partition fill
-    fraction passes ``target_fill`` (FP ~= fill^k: 0.5^7 ~ 0.8%), the
-    caller rebuilds via ``grow()`` with m re-targeted from the observed
-    key count (BITS_PER_KEY bits/key, next power of two). Doubling
-    schedule => O(log n) rebuilds over a run, each one distributed job.
-    At the 10^10 design point the same (pid, bitset) pairs live as a
-    table and the OR happens in a merge write; only the transport
-    differs.
+    Per-partition bitsets so new keys OR in incrementally: each wave's
+    FRESH keys come to the driver as one Arrow column (``toArrow`` runs
+    no Python worker and no shuffle) and their delta bitsets are built
+    there with numpy, instead of a full seen-set rebuild per wave.
+    Under the auto transport this class only runs while the seen-set
+    is below CrawlConfig.prefilter_table_threshold_keys; past that,
+    TableBloom builds its deltas executor-side. Saturation only
+    raises the FP rate (more anti-join probes), never correctness — but
+    a saturated prefilter silently degenerates to the bare anti-join at
+    exactly the scale it was built for, so the filter GROWS: when the
+    max per-partition fill fraction passes ``target_fill`` (FP ~=
+    fill^k: 0.5^7 ~ 0.8%), the caller rebuilds via ``grow()`` with m
+    re-targeted from the observed key count (BITS_PER_KEY bits/key,
+    next power of two). Doubling schedule => O(log n) rebuilds over a
+    run, each one key collect.
     """
 
     def __init__(self, n_partitions: int = 32, m_bits: int = 1 << 20,
@@ -113,37 +95,19 @@ class IncrementalBloom:
         """OR the url_hash values of ``keys`` into the partition
         bitsets. Returns the number of keys added (the auto-transport
         switchover in plans/crawl.py accumulates it)."""
-        m = self.m
-        keyed = keys.select(
-            F.pmod(F.col("url_hash"), F.lit(self.n_partitions)).cast("int")
-            .alias("pid"),
-            "url_hash",
-        )
-
-        def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            vals = pdf["url_hash"].to_numpy(dtype=np.int64)
-            return pd.DataFrame(
-                {"pid": [int(key[0])],
-                 "bits": [_build_bitset(vals, m).tobytes()],
-                 "n": [len(vals)]}
-            )
-
-        rows = (
-            keyed.groupBy("pid")
-            .applyInPandas(make, schema="pid int, bits binary, n long")
-            .collect()
-        )
-        added = 0
-        for r in rows:
-            delta = np.frombuffer(r["bits"], dtype=np.uint8)
-            pid = r["pid"]
-            self.n_keys += r["n"]
-            added += r["n"]
+        vals = (keys.select("url_hash").toArrow().column(0)
+                .to_numpy().astype(np.int64, copy=False))
+        # np.mod with a positive modulus is Spark's pmod: same pid
+        # split (and so the same bitsets) as an executor-side build
+        pids = np.mod(vals, self.n_partitions)
+        for pid in np.unique(pids).tolist():
+            delta = _build_bitset(vals[pids == pid], self.m)
             if pid in self.bits:
-                self.bits[pid] = self.bits[pid] | delta
+                self.bits[pid] |= delta
             else:
-                self.bits[pid] = delta.copy()
-        return added
+                self.bits[pid] = delta
+        self.n_keys += len(vals)
+        return len(vals)
 
     def fill_fraction(self) -> float:
         """Max per-partition fraction of set bits (the FP driver)."""
@@ -159,7 +123,7 @@ class IncrementalBloom:
 
     def grow(self, all_keys: DataFrame) -> int:
         """Re-target m from the observed key count and rebuild from the
-        authoritative seen-set (one distributed job). Returns new m."""
+        authoritative seen-set (one key collect). Returns new m."""
         per_part = max(1, self.n_keys // self.n_partitions)
         want = per_part * BITS_PER_KEY
         new_m = self.m
@@ -177,7 +141,9 @@ class IncrementalBloom:
 
 
 def bloom_maybe_seen_udf(spark, blooms: dict[int, tuple[bytes, int]], n_partitions: int):
-    """Vectorized probe: url_hash -> bool (True = possibly seen)."""
+    """Vectorized probe: url_hash -> bool (True = possibly seen). The
+    snapshot ships as a broadcast, exposed as ``probe.broadcast`` so the
+    caller can unpersist it once the plans that probe it have run."""
     bc = spark.sparkContext.broadcast(blooms)
 
     @F.pandas_udf(BooleanType())
@@ -196,6 +162,7 @@ def bloom_maybe_seen_udf(spark, blooms: dict[int, tuple[bytes, int]], n_partitio
             out[mask] = _probe_bitset(vals[mask], bits, entry[1])
         return pd.Series(out)
 
+    probe.broadcast = bc
     return probe
 
 
@@ -415,8 +382,10 @@ def anti_join_new(
     snapshot, the default family) or ``probe`` (any vectorized
     url_hash->maybe-seen pandas UDF — e.g. cuckoo_maybe_seen_udf from
     operators/cuckoo.py, whose filter additionally supports deletion for
-    re-crawl eviction). Both may only false-POSITIVE, never
-    false-negative, so the result is exact either way.
+    re-crawl eviction). When both are given, ``probe`` is the one the
+    plan uses (a caller that builds the probe owns its broadcast). Both
+    may only false-POSITIVE, never false-negative, so the result is
+    exact either way.
 
     The seen side is hinted shuffle_hash: the seen-set GROWS every wave,
     and letting Catalyst broadcast it would rebuild a driver-side hash

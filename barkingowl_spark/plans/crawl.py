@@ -63,6 +63,7 @@ from barkingowl_spark.operators.dedup import (
     IncrementalBloom,
     TableBloom,
     anti_join_new,
+    bloom_maybe_seen_udf,
 )
 from barkingowl_spark.operators.match import matched_by_col, pages_content_type
 from barkingowl_spark.operators.ordering import (
@@ -106,13 +107,21 @@ class CrawlConfig:
     # stage entirely.
     prefilter: str = "bloom"
     # O12 prefilter TRANSPORT (r4 verdict items 4; auto default r5).
-    # "driver" = per-pid bitsets collect to a driver dict and
-    # re-broadcast per wave (fine at sandbox scale, but multi-GB
-    # driver state at 10^10 keys). "table" = TableBloom: bitsets live
-    # as a versioned (pid, bits) parquet table under
-    # <checkpoint_dir>/bloom_state, OR-merged per wave by a
-    # distributed job and probed by a pid-cogrouped applyInPandas —
-    # the driver never holds a bitset. "auto" (DEFAULT since r5)
+    # "driver" = the keys collect to the driver as one Arrow column
+    # (each wave's fresh url_hash values; the whole seen-set at
+    # start/resume and on grow()), where numpy ORs them into per-pid
+    # bitsets held in a driver dict and re-broadcast per wave. Under
+    # "auto" these collects are bounded by the switchover: the driver
+    # transport only runs while the seen-set is below
+    # prefilter_table_threshold_keys (~40 MB of keys at the default),
+    # and a resume past it starts on the table transport. An explicit
+    # "driver" has no such bound — a resume or grow collects the whole
+    # seen-set, and the dict reaches multi-GB at 10^10 keys.
+    # "table" = TableBloom: bitsets live as a versioned (pid, bits)
+    # parquet table under <checkpoint_dir>/bloom_state, OR-merged per
+    # wave by a distributed job and probed by a pid-cogrouped
+    # applyInPandas — the driver never holds a bitset or a key.
+    # "auto" (DEFAULT since r5)
     # starts on the driver transport (cheaper per wave while the
     # seen-set is small) and switches to the table transport the
     # first time the cumulative key count crosses
@@ -330,8 +339,13 @@ def run_crawl(
             config.checkpoint_dir,
             compact_every=config.archive_compact_every,
         )
-    seeds_cfg = _seeds_cfg(spark, seeds)
     from pyspark import StorageLevel
+
+    # cached once per run: every wave broadcasts this config twice (the
+    # O9 scope join and _typecheck), and an uncached local relation
+    # would re-run its Python parallelize job for each of them
+    seeds_cfg = _seeds_cfg(spark, seeds).persist(StorageLevel.MEMORY_AND_DISK)
+    seeds_cfg.count()
 
     spark.conf.set(
         "spark.sql.execution.arrow.maxRecordsPerBatch",
@@ -452,6 +466,14 @@ def run_crawl(
             print(f"BOW_TIMING seed_wave={time.monotonic() - _t_seed:.2f}",
                   flush=True)
 
+    def _table_bloom(**kw) -> TableBloom:
+        return TableBloom(
+            spark,
+            os.path.join(config.checkpoint_dir, "bloom_state"),
+            config.bloom_partitions,
+            **kw,
+        )
+
     _t_pre = time.monotonic()
     bloom = None
     if config.use_bloom:
@@ -467,11 +489,7 @@ def run_crawl(
                 raise ValueError(
                     "table transport implemented for the bloom family"
                     " only (cuckoo keeps the driver transport)")
-            bloom = TableBloom(
-                spark,
-                os.path.join(config.checkpoint_dir, "bloom_state"),
-                config.bloom_partitions,
-            )
+            bloom = _table_bloom()
         else:
             # "auto" starts on the driver transport and may switch to
             # TableBloom mid-run (see _maybe_switch_transport); cuckoo
@@ -481,6 +499,15 @@ def run_crawl(
                 if config.prefilter == "cuckoo"
                 else IncrementalBloom(config.bloom_partitions)
             )
+            if (start_wave is not None
+                    and config.prefilter_transport == "auto"
+                    and isinstance(bloom, IncrementalBloom)
+                    and state.frontier().count()
+                    >= config.prefilter_table_threshold_keys):
+                # a resumed seen-set already past the switchover starts
+                # on the table transport: the driver build would
+                # collect every one of its keys
+                bloom = _table_bloom()
         seen_key_total = (
             bloom.add_keys(state.frontier().select("url_hash")) or 0)
         if bloom.needs_grow():  # resumed seen-set outgrew the default size
@@ -501,12 +528,7 @@ def run_crawl(
                 or not isinstance(bloom, IncrementalBloom)
                 or seen_key_total < config.prefilter_table_threshold_keys):
             return bloom
-        tb = TableBloom(
-            spark,
-            os.path.join(config.checkpoint_dir, "bloom_state"),
-            config.bloom_partitions,
-            m_bits=bloom.m,
-        )
+        tb = _table_bloom(m_bits=bloom.m)
         tb.add_keys(state.frontier().select("url_hash"))
         if os.environ.get("BOW_TIMING") == "1":
             print(
@@ -680,22 +702,28 @@ def run_crawl(
 
         deduped = first_discovery_wins(links)
         seen_keys = state.frontier().select("seed_url", "url_hash")
+        probe = None
         if isinstance(bloom, TableBloom):
             # executor-side transport: the prefilter tag happens in a
             # pid-cogrouped applyInPandas against the bitset TABLE —
             # no driver dict, no broadcast (r4 verdict item 4)
             fresh = bloom.anti_join_new(deduped, seen_keys)
         elif isinstance(bloom, IncrementalCuckoo):
-            fresh = anti_join_new(
-                deduped, seen_keys,
-                probe=cuckoo_maybe_seen_udf(
-                    spark, bloom.snapshot(), config.bloom_partitions),
-            )
+            probe = cuckoo_maybe_seen_udf(
+                spark, bloom.snapshot(), config.bloom_partitions)
+            fresh = anti_join_new(deduped, seen_keys, probe=probe)
         else:
+            # the probe is built here so its broadcast can be released
+            # once the wave commits; the snapshot still goes in
+            # positionally for wrappers that count prefilter hits
+            # (perfbench/tracing.py)
+            snap = bloom.snapshot() if bloom is not None else None
+            if snap is not None:
+                probe = bloom_maybe_seen_udf(
+                    spark, snap, config.bloom_partitions)
             fresh = anti_join_new(
-                deduped, seen_keys,
-                bloom.snapshot() if bloom is not None else None,
-                config.bloom_partitions,
+                deduped, seen_keys, snap, config.bloom_partitions,
+                probe=probe,
             )
         typed = _typecheck(
             # preparse: pages_ct is a cached corpus-sized projection that
@@ -844,17 +872,23 @@ def run_crawl(
         t_write = time.monotonic()
         parsed.unpersist()
         typed.unpersist()
+        if probe is not None:
+            # the wave is committed and the next state reads it back
+            # from the checkpoint: nothing probes this snapshot again
+            probe.broadcast.unpersist()
         state = _load(wave)
+        # switch first, so a driver-transport grow() never collects a
+        # seen-set past the switchover
+        bloom = _maybe_switch_transport(bloom, state)
         if bloom is not None and bloom.needs_grow():
             # prefilter saturating (fill > target => FP ~ fill^k): re-target
             # m from the observed key count and rebuild from the
             # authoritative seen-set — doubling schedule, so O(log n)
-            # rebuilds over a run, each one distributed job
+            # rebuilds over a run
             new_m = bloom.grow(state.frontier().select("url_hash"))
             if os.environ.get("BOW_TIMING") == "1":
                 print(f"BOW_TIMING bloom_grow wave={wave} m={new_m}",
                       flush=True)
-        bloom = _maybe_switch_transport(bloom, state)
         if os.environ.get("BOW_TIMING") == "1":
             print(
                 f"BOW_TIMING wave={wave} d={d} sched={sched_total} "
@@ -873,4 +907,5 @@ def run_crawl(
             corpus.unpersist()
     if robots is not None and config.robots is None:
         robots.unpersist()  # the corpus-built cache, not a caller's dim
+    seeds_cfg.unpersist()
     return state

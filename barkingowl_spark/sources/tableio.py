@@ -194,7 +194,11 @@ class ParquetDirsIO:
         return waves[-1] if waves else None
 
     def _empty_frontier(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], FRONTIER_SCHEMA)
+        # from a zero-partition RDD: an empty local list would still
+        # parallelize into one Python task per core, and the first wave
+        # scans the (empty) archive several times
+        return spark.createDataFrame(
+            spark.sparkContext.emptyRDD(), FRONTIER_SCHEMA)
 
     def read_queue(self, spark: SparkSession, wave: int) -> DataFrame:
         p = os.path.join(self._wave_dir(wave), "data", "_t=queue")

@@ -48,9 +48,11 @@ def _slice_index(cache) -> int | str:
         return dt.date.today().toordinal() % N_SLICES
 
 
-def test_rotating_oracle_slice(spark, cache, capsys):
+def test_rotating_oracle_slice(spark, request, capsys):
     names = sorted(entrymod.queries())
-    k = _slice_index(cache)
+    # the cache plugin may be disabled (-p no:cacheprovider): then
+    # config has no .cache and the slice rotates daily
+    k = _slice_index(getattr(request.config, "cache", None))
     picked = names if k == "all" else names[int(k)::N_SLICES]
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     con = duckdb.connect()

@@ -82,6 +82,19 @@ def test_dot_topk_stays_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
+def test_empty_archive_runs_no_tasks(spark, tmp_path):
+    """Before the first wave commits an archive delta, the archive is
+    an empty frame with the frontier schema and no partitions: the
+    wave that reads it launches no task for it."""
+    from barkingowl_spark.schemas import FRONTIER_SCHEMA
+    from barkingowl_spark.sources.tableio import ParquetDirsIO
+
+    empty = ParquetDirsIO(str(tmp_path)).read_archive(spark, 0)
+    assert empty.schema == FRONTIER_SCHEMA
+    assert empty.rdd.getNumPartitions() == 0
+    assert empty.count() == 0
+
+
 def test_tableio_interface_parity():
     """IcebergIO (untestable in the sandbox: no Iceberg jar, no network)
     must expose exactly the public seam ParquetDirsIO implements, with
